@@ -10673,8 +10673,7 @@ def q_embedding_pq_rotated(e: DataFrame) -> DataFrame:
     rot = materialize(
         e.select(
             "vec_id", structured_rotation("embedding", KMEANS_D).alias("__rv")
-        ),
-        "local",
+        )
     )
     books = pq_fit(rot, m=8, k=16, iters=2, vec_col="__rv", id_col="vec_id")
     return pq_encode(rot, books, vec_col="__rv", id_col="vec_id").select(

@@ -27,20 +27,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..operators.aggregates import dedup_exact
 from ..operators.checkpointing import materialize
+from ..operators.partitioning import spread
 
 
 def _normalized(col: str) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", " ")
-
-
-def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Fan-out stage parallelism — shared engine-wide helper (see
-    ``operators/partitioning.spread``; this module measured the pattern
-    first: a single small parquet file -> 1 partition -> 1 core does
-    all the shingling)."""
-    from ..operators.partitioning import spread
-
-    return spread(df, min_partitions)
 
 
 def exact_text_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -88,7 +79,7 @@ def _with_shingles(
     base = df.filter(F.size(F.split(_normalized(text_col), " ")) >= n).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("__text")
     )
-    base = _spread(base)
+    base = spread(base)
     return base.select("id", shingle_udf("__text").alias(out))
 
 
@@ -116,7 +107,6 @@ def minhash_signature_bands(
     shingle_n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    checkpoint_mode: str = "local",
 ) -> tuple[DataFrame, DataFrame]:
     """The signature + banding front half of the MinHash pipeline,
     exposed so skew tooling can inspect the bucket-key distribution
@@ -185,14 +175,14 @@ def minhash_signature_bands(
         F.size(F.split(_normalized(text_col), " ")) >= shingle_n
     ).select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     sig = (
-        _spread(base)
+        spread(base)
         .select("id", shingle_sig_udf("__text").alias("__ss"))
         .select("id", F.col("__ss.sh").alias("sh"), F.col("__ss.sig").alias("sig"))
     )
     # Materialize the Arrow pipeline ONCE; the band explode, both sides
     # of the bucket self-join, and both shingle join-backs below all
     # derive from this checkpoint (see ngram_jaccard_pairs note).
-    sig = materialize(sig, checkpoint_mode)
+    sig = materialize(sig)
     # Band key = hash of the band's signature slice.  Explode ids ONLY:
     # the (band, bucket) shuffle and the bucket self-join move 3 longs
     # per row.  Carrying `sh` here would duplicate every document's full
@@ -220,7 +210,6 @@ def minhash_near_dup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     jaccard_threshold: float = 0.7,
-    checkpoint_mode: str = "local",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-duplicate pairs.
@@ -241,7 +230,7 @@ def minhash_near_dup_pairs(
     production run sizes that mass before paying for it.
     """
     sig, banded = minhash_signature_bands(
-        df, text_col, id_col, shingle_n, num_hashes, bands, checkpoint_mode
+        df, text_col, id_col, shingle_n, num_hashes, bands
     )
     if max_bucket_size is not None:
         # Hot-bucket cap — the band-join twin of ``max_shingle_df``: a
@@ -325,7 +314,7 @@ def simhash_signatures(
 
         return texts.map(sig)
 
-    df = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
+    df = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
     return df.select("id", simhash_udf("__text").alias("simhash"))
 
 
@@ -335,7 +324,6 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into
     ``bands`` chunks (pigeonhole: any pair within ``max_hamming < bands``
@@ -355,7 +343,7 @@ def simhash_near_dup_pairs(
             )
         ).alias("band", "chunk"),
     )
-    banded = materialize(banded, checkpoint_mode)  # compute signatures once
+    banded = materialize(banded)  # compute signatures once
     l = banded.select("band", "chunk", F.col("id").alias("left_id"), F.col("simhash").alias("lh"))
     r = banded.select("band", "chunk", F.col("id").alias("right_id"), F.col("simhash").alias("rh"))
     return (
@@ -376,7 +364,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
     prefix_filter: bool | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle
@@ -443,7 +430,7 @@ def ngram_jaccard_pairs(
                 F.col("oa.g").alias("cs"),
             )
         )
-        docs = materialize(docs, checkpoint_mode)
+        docs = materialize(docs)
         plen = (
             F.size("cs")
             - F.ceil(F.lit(float(threshold)) * F.col("nsh")).cast("int")
@@ -483,7 +470,7 @@ def ngram_jaccard_pairs(
         # recompute / repartition-reuse / persist: 8-9s -> 1.3s at sf0.1).
         # Lineage truncation trades executor-failure recovery of this
         # intermediate for not running the pipeline per join side.
-        sizes = materialize(sizes, checkpoint_mode)
+        sizes = materialize(sizes)
         l = sizes.select(*on, F.col("id").alias("left_id"), F.col("nsh").alias("lns"))
         r = sizes.select(*on, F.col("id").alias("right_id"), F.col("nsh").alias("rns"))
         pair_common = (
@@ -507,7 +494,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.6,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Directed shingle-CONTAINMENT pairs (§2b-K): ``(src_id, dst_id,
     containment)`` where ``containment = |S_src ∩ S_dst| / |S_src| >=
@@ -534,7 +520,7 @@ def ngram_containment_pairs(
         from ..operators.diagnostics import drop_hot_buckets
 
         sizes = drop_hot_buckets(sizes, ["s"], max_shingle_df)
-    sizes = materialize(sizes, checkpoint_mode)
+    sizes = materialize(sizes)
     l = sizes.select("s", F.col("id").alias("left_id"), F.col("nsh").alias("lns"))
     r = sizes.select("s", F.col("id").alias("right_id"), F.col("nsh").alias("rns"))
     pair_common = (
@@ -575,7 +561,6 @@ def ngram_jaccard_incremental(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Incremental dedup — the production shape of daily corpus
     maintenance: match each NEW document against the already-accepted
@@ -591,9 +576,7 @@ def ngram_jaccard_incremental(
     quadratic blowup."""
     c = shingle_postings(corpus, text_col, id_col, n).withColumn("__new", F.lit(0))
     a = shingle_postings(new, text_col, id_col, n).withColumn("__new", F.lit(1))
-    return _incremental_match(
-        c.unionByName(a), threshold, max_shingle_df, checkpoint_mode
-    )
+    return _incremental_match(c.unionByName(a), threshold, max_shingle_df)
 
 
 def shingle_postings(
@@ -617,7 +600,6 @@ def _incremental_match(
     sizes: DataFrame,
     threshold: float,
     max_shingle_df: int | None,
-    checkpoint_mode: str,
 ) -> DataFrame:
     """Shared match stage of the incremental paths: posting rows
     ``(id, nsh, s, __new)`` in, ``(new_id, match_id, jaccard)`` out.
@@ -629,7 +611,7 @@ def _incremental_match(
         from ..operators.diagnostics import drop_hot_buckets
 
         sizes = drop_hot_buckets(sizes, ["s"], max_shingle_df)
-    sizes = materialize(sizes, checkpoint_mode)
+    sizes = materialize(sizes)
     left = (
         sizes.filter(F.col("__new") == 1)
         .select("s", F.col("id").alias("new_id"), F.col("nsh").alias("lns"))
@@ -758,7 +740,6 @@ def ngram_jaccard_incremental_indexed(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
     new_postings: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`ngram_jaccard_incremental` against a MATERIALIZED corpus
@@ -782,7 +763,7 @@ def ngram_jaccard_incremental_indexed(
         new_postings = shingle_postings(new, text_col, id_col, n)
     new_sizes = new_postings.withColumn("__new", F.lit(1))
     return _incremental_match(
-        corpus_sizes.unionByName(new_sizes), threshold, max_shingle_df, checkpoint_mode
+        corpus_sizes.unionByName(new_sizes), threshold, max_shingle_df
     )
 
 
@@ -793,7 +774,6 @@ def near_dup_clusters(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: n-gram Jaccard pairs -> connected
     components -> every document labeled with the min doc id of its
@@ -804,11 +784,9 @@ def near_dup_clusters(
 
     pairs = ngram_jaccard_pairs(
         df, text_col, id_col, n=n, threshold=threshold,
-        max_shingle_df=max_shingle_df, checkpoint_mode=checkpoint_mode,
+        max_shingle_df=max_shingle_df,
     )
-    comp = connected_components(
-        pairs, "left_id", "right_id", checkpoint_mode=checkpoint_mode
-    )
+    comp = connected_components(pairs, "left_id", "right_id")
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp.withColumnRenamed("vertex", "id"), "id", "left")
@@ -826,7 +804,6 @@ def near_dup_keep_greedy(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """First-fit dedup policy: ``(id, kept)`` for every document, where
     a document is kept iff no KEPT smaller-id document is within
@@ -844,12 +821,9 @@ def near_dup_keep_greedy(
 
     pairs = ngram_jaccard_pairs(
         df, text_col, id_col, n=n, threshold=threshold,
-        max_shingle_df=max_shingle_df, checkpoint_mode=checkpoint_mode,
+        max_shingle_df=max_shingle_df,
     )
-    return greedy_first_fit(
-        pairs, df.select(id_col), v_col=id_col,
-        checkpoint_mode=checkpoint_mode,
-    )
+    return greedy_first_fit(pairs, df.select(id_col), v_col=id_col)
 
 
 def winnow_fingerprints(
@@ -911,7 +885,7 @@ def winnow_fingerprints(
 
         return texts.map(fp)
 
-    base = _spread(df.select(F.col(id_col), F.col(text_col).alias("__text")))
+    base = spread(df.select(F.col(id_col), F.col(text_col).alias("__text")))
     return base.select(
         F.col(id_col), F.explode(winnow_udf("__text")).alias("fingerprint")
     ).distinct()
@@ -925,7 +899,6 @@ def winnow_match_pairs(
     window: int = 4,
     min_shared: int = 3,
     max_fingerprint_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints
     (§2b-K): the MOSS candidate-detection join — plagiarism / template
@@ -950,7 +923,7 @@ def winnow_match_pairs(
     # fingerprint pipeline (ArrowEvalPython + distinct + df-cap window)
     # runs ONCE, not once per join side — the same measured trade as
     # ngram_jaccard_pairs (lineage truncation vs per-side recompute).
-    posting = materialize(posting, checkpoint_mode)
+    posting = materialize(posting)
     l = posting.select(F.col("id").alias("left_id"), "f")
     r = posting.select(F.col("id").alias("right_id"), "f")
     return (

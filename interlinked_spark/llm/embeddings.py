@@ -769,7 +769,7 @@ def semdedup_keep_assigned(
     if eager:
         from ..operators.checkpointing import materialize
 
-        result = materialize(result, "local", eager=True)
+        result = materialize(result, eager=True)
         tagged.unpersist()
     return result
 
@@ -1204,8 +1204,6 @@ def ivfpq_fit(
     # would otherwise re-evaluate inside every one of the PQ fit's
     # scans (2 * iters + 1 of them) — identical codebooks either way,
     # the fit rounds just read checkpointed doubles instead.
-    resid_df = materialize(
-        df.select(F.col(id_col), resid.alias("__res")), "local"
-    )
+    resid_df = materialize(df.select(F.col(id_col), resid.alias("__res")))
     books = pq_fit(resid_df, m=m, k=k, iters=pq_iters, vec_col="__res", id_col=id_col)
     return coarse, books

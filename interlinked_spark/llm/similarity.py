@@ -344,7 +344,6 @@ def lsh_similarity_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     self_pairs: bool = False,
-    checkpoint_mode: str = "local",
     max_bucket_size: int | None = None,
     projections_per_band: int = 1,
 ) -> DataFrame:
@@ -438,7 +437,7 @@ def lsh_similarity_join(
         return drop_hot_buckets(assign, ["entry", "bucket"], max_bucket_size)
 
     if self_pairs:
-        assign = materialize(cap(buckets(corpus, "neighbor_id")), checkpoint_mode)
+        assign = materialize(cap(buckets(corpus, "neighbor_id")))
         cand = (
             assign.select("entry", "bucket", F.col("neighbor_id").alias("query_id"))
             .join(assign, ["entry", "bucket"])
@@ -500,7 +499,6 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_hash_tables: int = 6,
-    checkpoint_mode: str = "local",
     projections_per_band: int = 1,
     bucket_length: float = 0.5,
 ) -> DataFrame:
@@ -533,7 +531,6 @@ def embedding_near_dup_pairs(
         df, df, threshold_distance=max_dist, num_hash_tables=num_hash_tables,
         bucket_length=bucket_length,
         id_col=id_col, vec_col=vec_col, self_pairs=True,
-        checkpoint_mode=checkpoint_mode,
         projections_per_band=projections_per_band,
     )
     return (
@@ -942,7 +939,6 @@ def lsh_incremental_matches(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Match a NEW vector batch against the MATERIALIZED corpus index:
     band only the batch (parameters + dim from the stored meta), join
@@ -982,7 +978,7 @@ def lsh_incremental_matches(
             corpus_assigns, ["entry", "bucket"], max_bucket_size
         )
     cand = (
-        materialize(new_assigns, checkpoint_mode)
+        materialize(new_assigns)
         .join(corpus_assigns, ["entry", "bucket"])
         .filter(F.col("new_id") != F.col("match_id"))
         .select("new_id", "match_id")
@@ -1011,7 +1007,6 @@ def vector_gate_rejections(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
-    checkpoint_mode: str = "local",
     meta=None,
     batch_dim=_UNPROBED,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1055,8 +1050,7 @@ def vector_gate_rejections(
             # the gate probed this batch's dim at the top — skip the
             # banding model's own per-batch limit(1) probe job
             dim=batch_dim if isinstance(batch_dim, int) else None,
-        ),
-        checkpoint_mode,
+        )
     )
     new_side = assigns.select(F.col("id").alias("new_id"), "entry", "bucket")
 
@@ -1178,8 +1172,7 @@ def mmr_select(
             F.round(
                 cosine_similarity(F.col(vec_col), F.col("__qv")), round_dp
             ).alias("__rel"),
-        ),
-        "local",
+        )
     )
     first = (
         scored.orderBy(F.col("__rel").desc(), F.col("id").asc())
@@ -1235,7 +1228,7 @@ def mmr_select(
         # greedy work done so far executes once here instead of at the
         # end — no repeated computation, only a truncated plan.
         if checkpoint_every and r < int(k) and (r - 1) % int(checkpoint_every) == 0:
-            selected = materialize(selected, "local")
+            selected = materialize(selected)
     return selected.select(
         "rank",
         F.col("id").alias("vec_id"),

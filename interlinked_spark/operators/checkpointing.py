@@ -1,50 +1,34 @@
-"""Checkpoint-mode knob for iterative / multiply-consumed intermediates.
+"""Lineage truncation for iterative / multiply-consumed intermediates.
 
 The dedup stack and ``connected_components`` truncate lineage at points
 where an intermediate is (a) consumed by both sides of a self-join or
-(b) rebuilt every iteration of a loop.  Two modes:
+(b) rebuilt every iteration of a loop.  Whether that checkpoint is
+durable is a deployment setting, not an argument: ``materialize`` reads
+the session's checkpoint directory (``spark.checkpoint.dir`` /
+``SparkContext.setCheckpointDir``).
 
-- ``"local"`` (default): ``DataFrame.localCheckpoint`` — blocks stored
-  on executor local disk/memory.  Fastest (no DFS round-trip) and right
-  for single-node / interactive runs, but an executor loss discards its
-  blocks and, because lineage was truncated, the WHOLE upstream pipeline
-  replays.  At 100 TB with a 1000-executor fleet, some executor loss per
-  job is the expectation, not the exception.
-- ``"reliable"``: ``DataFrame.checkpoint`` — blocks written to the
-  checkpoint directory (HDFS/S3 on a real cluster).  Pays a DFS write
-  per materialization but survives executor loss; the production option
-  for long dedup pipelines.
+- No directory set (the default): ``DataFrame.localCheckpoint`` —
+  blocks stored on executor local disk/memory.  Fastest (no DFS
+  round-trip) and right for single-node / interactive runs, but an
+  executor loss discards its blocks and, because lineage was truncated,
+  the WHOLE upstream pipeline replays.
+- Directory set: ``DataFrame.checkpoint`` — blocks written to that
+  directory (HDFS/S3 on a real cluster).  Pays a DFS write per
+  materialization but survives executor loss; the production setting
+  for long dedup pipelines at fleet scale, where some executor loss per
+  job is the expectation.
 
-Both modes produce identical results (pinned in
-``tests/test_scale_tools.py``); the knob trades recovery cost only.
+Both produce identical results (pinned in ``tests/test_scale_tools.py``).
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 
-CHECKPOINT_MODES = ("local", "reliable")
 
-
-def materialize(df: DataFrame, mode: str = "local", eager: bool = False) -> DataFrame:
-    """Truncate lineage for ``df`` under the given checkpoint mode.
-
-    ``"reliable"`` requires a checkpoint dir; if the session has none
-    configured (``sparkContext.setCheckpointDir`` never called), a
-    process-local temp dir is installed so the knob works out of the box
-    — a real cluster should point it at durable storage (HDFS/S3)
-    before calling into the dedup stack.
-    """
-    if mode not in CHECKPOINT_MODES:
-        raise ValueError(f"checkpoint_mode must be one of {CHECKPOINT_MODES}, got {mode!r}")
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(
-                os.path.join(tempfile.gettempdir(), f"spark_checkpoints_{os.getpid()}")
-            )
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Truncate lineage for ``df``: a reliable checkpoint when the
+    session has a checkpoint directory, a local one otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

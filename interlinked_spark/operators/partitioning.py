@@ -30,7 +30,6 @@ per-task work, not a local core-count constant.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -41,10 +40,9 @@ __all__ = ["spread"]
 # parquet text expands 3-5x in memory and the downstream kernels
 # (shingling, md5, inverse-CDF sampling) multiply work further, so 64 KB
 # of input is tens of milliseconds of compute — enough to amortize the
-# ~10 ms task launch.  Env-tunable for clusters with different
-# scheduling costs; the default is a work-per-task bound, not a core
-# count.
-_BYTES_PER_TASK = int(os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", 1 << 16))
+# ~10 ms task launch.  A work-per-task bound, not a core count;
+# callers with different scheduling costs pass ``bytes_per_task``.
+_BYTES_PER_TASK = 1 << 16
 
 # Catalyst returns Long.MaxValue-ish estimates when it cannot size a
 # plan; treat anything absurd as "unknown" and keep full parallelism.

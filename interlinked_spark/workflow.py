@@ -26,13 +26,15 @@ Engine deltas (SURVEY.md §3.1/§4.1):
   (``README.md:33-53`` vs ``workflow.py:220``).  Here :class:`Run` routes
   every resource production through :meth:`Workflow.resolve`, so
   persist/reuse/catalog policy is injectable.
-* **fan-out persist policy** — a resource whose pattern has more than one
-  static dependent (known from :meth:`Workflow.deps`) is marked
-  ``persist(MEMORY_AND_DISK)`` when it is a DataFrame, restoring the
+* **fan-out persist policy** — :class:`Run` marks a DataFrame resource
+  ``persist(MEMORY_AND_DISK)`` the second time it is consumed within
+  the run (the memo cache is the fan-out signal), restoring the
   reference's evaluate-once semantics across Spark actions without
   persisting everything (which would OOM at 100 TB).  Multi-provide
-  tuples always persist.  Nothing is auto-unpersisted (results are lazy
-  and outlive the run); ``Run.release()`` frees explicitly.
+  slices persist eagerly, since their shared producer already ran once.
+  Bare scans and streaming frames never persist.  Nothing is
+  auto-unpersisted (results are lazy and outlive the run);
+  ``Run.release()`` frees explicitly.
 * per-cell debug timing kept (``workflow.py:250-257``), noting that for
   DataFrame producers it measures *plan construction*, not execution.
 """
@@ -132,7 +134,6 @@ class Workflow:
         if config:
             self.set_config(config)
         self._validated = False
-        self._fanout_cache: Optional[dict[str, int]] = None
 
     # -- registry -----------------------------------------------------
 
@@ -149,7 +150,6 @@ class Workflow:
 
     def provide(self, *patterns: str, _override: bool = False, **kw) -> Cell:
         self._validated = False
-        self._fanout_cache = None
         if not _override:
             for pattern in patterns:
                 if pattern in self.router:
@@ -163,7 +163,6 @@ class Workflow:
 
     def depend(self, **dependencies: str) -> Callable:
         self._validated = False
-        self._fanout_cache = None
         templates = {k: NameTemplate(v) for k, v in dependencies.items()}
 
         def decorator(fn: Callable) -> Callable:
@@ -264,19 +263,6 @@ class Workflow:
                     f'(validation failed when evaluating "{child}")'
                 )
             self._walk(child, graph, ancestors + (child,))
-
-    def _fanout_counts(self) -> dict[str, int]:
-        """Static dependent-count per pattern — drives the persist
-        policy.  Memoized until the graph changes; graphs with unknown
-        deps simply get no auto-persist (best-effort)."""
-        if self._fanout_cache is None:
-            try:
-                self._fanout_cache = {
-                    p: len(children) for p, children in self.deps().items()
-                }
-            except UnknownDependency:
-                self._fanout_cache = {}
-        return self._fanout_cache
 
     # -- resolution ---------------------------------------------------
 

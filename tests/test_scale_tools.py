@@ -1,6 +1,8 @@
 """Skew salting + bucketed co-located joins — correctness AND the plan
 properties that make them worth using."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -241,28 +243,82 @@ def test_lsh_hot_bucket_preflight_and_exact_prededup_fix(spark):
     assert before.pair_mass - after.pair_mass >= tables * clique_mass
 
 
-def test_checkpoint_modes_produce_identical_results(spark):
-    """VERDICT r6 item 4: `local` vs `reliable` checkpoint modes are a
-    recovery-cost trade ONLY — identical results on the same inputs, for
-    both connected_components and the minhash pipeline."""
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Context manager pointing the session's checkpoint dir at
+    ``tmp_path`` for its block.  The dir is cleared again on exit (and
+    at teardown): Spark has no public unset, and a dir left behind would
+    switch every later test to reliable checkpoints."""
+    sc = spark.sparkContext
+
+    def clear():
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+    @contextlib.contextmanager
+    def use():
+        sc.setCheckpointDir(str(tmp_path))
+        try:
+            yield tmp_path
+        finally:
+            clear()
+
+    yield use
+    clear()
+
+
+def _observed_materialize_jobs(spark, group: str) -> tuple[int, int]:
+    """(jobs run, observed row count) for one eager ``materialize`` of
+    an observed 1,000-row frame, counted per job group."""
+    from pyspark.sql import Observation
+
+    from interlinked_spark.operators.checkpointing import materialize
+
+    sc = spark.sparkContext
+    obs = Observation(group)
+    sc.setJobGroup(group, group)
+    try:
+        materialize(
+            spark.range(1000).observe(obs, F.count(F.lit(1)).alias("n")), eager=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), obs.get["n"]
+
+
+def test_local_and_reliable_checkpoints_produce_identical_results(spark, reliable_checkpoints):
+    """Local vs reliable checkpoints are a recovery-cost trade ONLY:
+    identical results on the same inputs, for both connected_components
+    and the minhash pipeline.  Which one ``materialize`` takes is decided
+    by the session's checkpoint dir alone, and an observed eager
+    materialization is one job either way (the graph operators' fused
+    convergence probes rely on that)."""
     from interlinked_spark.llm.dedup import minhash_near_dup_pairs
+    from interlinked_spark.operators.checkpointing import materialize
     from interlinked_spark.operators.graph import connected_components
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    materialize(spark.range(10), eager=True)
+    assert sc.getCheckpointDir() is None  # no dir is installed behind the caller's back
+    assert _observed_materialize_jobs(spark, "ckpt_local") == (1, 1000)
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20), (30, 31)],
         "src int, dst int",
     )
-    local = connected_components(edges, checkpoint_mode="local")
-    reliable = connected_components(edges, checkpoint_mode="reliable")
-    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, reliable.collect()))
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = minhash_near_dup_pairs(docs, checkpoint_mode="local")
-    b = minhash_near_dup_pairs(docs, checkpoint_mode="reliable")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    local_cc = sorted(map(tuple, connected_components(edges).collect()))
+    local_pairs = sorted(map(tuple, minhash_near_dup_pairs(docs).collect()))
 
-    with pytest.raises(ValueError):
-        connected_components(edges, checkpoint_mode="bogus")
+    with reliable_checkpoints() as ckpt_dir:
+        reliable_cc = connected_components(edges)
+        assert sorted(map(tuple, reliable_cc.collect())) == local_cc
+        assert any(p.is_file() for p in ckpt_dir.rglob("*"))
+        reliable_pairs = minhash_near_dup_pairs(docs)
+        assert sorted(map(tuple, reliable_pairs.collect())) == local_pairs
+        assert _observed_materialize_jobs(spark, "ckpt_reliable") == (1, 1000)
+    assert sc.getCheckpointDir() is None
 
 
 def test_minhash_max_bucket_size_cap(spark):
